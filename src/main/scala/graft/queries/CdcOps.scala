@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.pipeline.IncrementalFinal
 import graft.streaming.{CdcApply, StreamingMv}
 
@@ -783,11 +783,10 @@ object CdcOps {
         // relation — a real stream receives each batch exactly once,
         // and the checkpoint simulates that arrival instead of
         // re-scanning events per micro-batch
-        val ev = Tables(s, dir, "events")
+        val ev = Materialize.once("cdc_mv_streamed.ev", Tables(s, dir, "events")
           .select(col("event_type").as("k"),
             floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"),
-            col("event_id"))
-          .localCheckpoint(true)
+            col("event_id")))
         val cfg = StreamingMv.Config(Seq("k"))
         (0L until 3L).foreach { b =>
           StreamingMv.foldBatch(s, state, cfg)(
@@ -823,11 +822,10 @@ object CdcOps {
         // relation — a real stream receives each batch exactly once,
         // and the checkpoint simulates that arrival instead of
         // re-scanning events per micro-batch
-        val ev = Tables(s, dir, "events")
+        val ev = Materialize.once("cdc_mv_streamed_minmax.ev", Tables(s, dir, "events")
           .select(col("event_type").as("k"),
             floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"),
-            col("event_id"))
-          .localCheckpoint(true)
+            col("event_id")))
         val cfg = StreamingMv.Config(Seq("k"), extremes = true)
         (0L until 3L).foreach { b =>
           StreamingMv.foldBatch(s, state, cfg)(
@@ -866,11 +864,11 @@ object CdcOps {
         val state = new java.io.File(
           sys.props("java.io.tmpdir"), s"graft_smvdx_$tag").toString
         // materialized once — see cdc_mv_streamed (r19)
-        val ev = Tables(s, dir, "events")
+        val ev = Materialize.once("cdc_mv_streamed_distinct.ev",
+          Tables(s, dir, "events")
           .select(col("event_type").as("k"),
             floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"),
-            col("user_id"), col("event_id"))
-          .localCheckpoint(true)
+            col("user_id"), col("event_id")))
         val cfg = StreamingMv.Config(Seq("k"),
           distinctCol = Some("user_id"))
         (0L until 3L).foreach { b =>
@@ -916,12 +914,12 @@ object CdcOps {
         val state = new java.io.File(
           sys.props("java.io.tmpdir"), s"graft_smvpct_$tag").toString
         // materialized once — see cdc_mv_streamed (r19)
-        val ev = Tables(s, dir, "events").filter(col("value").isNotNull)
+        val ev = Materialize.once("cdc_mv_streamed_percentile.ev",
+          Tables(s, dir, "events").filter(col("value").isNotNull)
           .select(col("event_type").as("k"),
             expr(MicroGrid.sparkSql).as("bucket"),
             floor(col("value") * lit(1e6)).cast(LongType).as("v_micro"),
-            col("event_id"))
-          .localCheckpoint(true)
+            col("event_id")))
         val cfg = StreamingMv.Config(Seq("k", "bucket"))
         (0L until 3L).foreach { b =>
           StreamingMv.foldBatch(s, state, cfg)(
@@ -1704,11 +1702,11 @@ object CdcOps {
           .partitionBy("event_type")
         val v1 = s.read.parquet(basePath)
           .withColumn("_mx", max(col("v_micro")).over(w))
-        val retracted = v1.filter(col("v_micro") === col("_mx"))
-          .select("event_type", "v_micro").localCheckpoint(true)
-        val v2 = v1
+        val retracted = Materialize.once("cdc_mv_refresh_retraction.retracted", v1
+          .filter(col("v_micro") === col("_mx")).select("event_type", "v_micro"))
+        val v2 = Materialize.once("cdc_mv_refresh_retraction.kept", v1
           .filter(col("v_micro").isNull || col("v_micro") < col("_mx"))
-          .select("event_type", "v_micro").localCheckpoint(true)
+          .select("event_type", "v_micro"))
         v2.write.mode("overwrite").parquet(basePath)
         // ONE repair call: fold the retraction changelog, dirty-rescan
         // the extreme-losing grains, re-stamp — extremes stay routed

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
 
-import graft.core.{Layout, Tables}
+import graft.core.{Layout, Materialize, Tables}
 import graft.operators.{Curation, Dedup}
 
 /** Corpus-curation inventory over `documents`: the selection operators a
@@ -28,33 +28,22 @@ object CurationOps {
 
   /** The curation chains' shared PREFIX (quality 0.5 → Jaccard-0.8
     * cluster survivors over the raw corpus —
-    * [[graft.operators.Curation.qualitySurvivors]]), materialized ONCE
-    * per (JVM, sfDir) and read by the DERIVED chain entries
+    * [[graft.operators.Curation.qualitySurvivors]]), a
+    * [[Materialize.shared]] table read by the DERIVED chain entries
     * (`pipeline_curate_full`, `pipeline_curate_cdc`) — VERDICT r12's
     * plan audit measured the identical prefix recomputed per chain.
     * `pipeline_curate` deliberately stays LIVE end-to-end: it is the
     * canonical whole-chain cost signal and its oracle check stays
-    * composition-proving. Same contract as the dedup label table: at
-    * 100 TB this is the persisted "curated corpus" table refreshed per
-    * crawl; here a pid-keyed tmp parquet. */
-  private val survivorTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * composition-proving. At 100 TB this is the persisted "curated
+    * corpus" table refreshed per crawl. */
   private[graft] def curatedSurvivors(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_curated_${ProcessHandle.current().pid()}_$tag").toString
-    survivorTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Materialize.shared(s, dir, "curated") {
       Curation.qualitySurvivors(Tables(s, dir, "documents"),
-          TextOps.Stopwords, minQuality = 0.5, shingleN = 3,
-          jaccardThreshold = 0.8)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        TextOps.Stopwords, minQuality = 0.5, shingleN = 3,
+        jaccardThreshold = 0.8)
+    }
 
   /** CTE chain shared by the composed-pipeline oracles (`pipeline_
     * curate_full`, `pipeline_curate_cdc`): raw corpus → quality filter →

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.operators.{Curation, Dedup, FuzzyMatch, SemanticDedup}
 
 /** Deduplication inventory over `documents` / `embeddings`.
@@ -91,80 +91,47 @@ object DedupOps {
        ORDER BY d.doc_id"""
 
   /** The near-dup cluster-label table (min-label connected components
-    * over the Jaccard-0.8 pair graph), materialized ONCE per
-    * (JVM, sfDir) and shared by the DERIVED report entries
-    * (`dedup_survivors`, `dedup_rate_report`,
-    * `dedup_cluster_split_assign`, `dedup_cluster_sizes`) — VERDICT
-    * r11 measured the same clustering recomputed 4–5× across one
-    * inventory pass. `dedup_clusters` / `dedup_clusters_star`
-    * deliberately do NOT use this: they are the canonical clustering
-    * entries, so the bench keeps a true clustering-cost signal and
-    * their oracle checks stay end-to-end live.
-    *
-    * At 100 TB this is a persisted lake table maintained beside the
-    * corpus (the incremental fold is
-    * [[Dedup.incrementalConnectedComponents]]); here it is a
-    * process-scoped tmp parquet — keyed by pid, so a driver testdata
-    * regeneration (always a new JVM) can never serve stale labels.
-    * `computeIfAbsent` blocks concurrent first callers: parallel
-    * suites cannot observe a half-written table. */
-  private val labelTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * over the Jaccard-0.8 pair graph), a [[Materialize.shared]] table
+    * read by the DERIVED report entries (`dedup_survivors`,
+    * `dedup_rate_report`, `dedup_cluster_split_assign`,
+    * `dedup_cluster_sizes`) — VERDICT r11 measured the same clustering
+    * recomputed 4–5× across one inventory pass. `dedup_clusters` /
+    * `dedup_clusters_star` deliberately do NOT use this: they are the
+    * canonical clustering entries, so the bench keeps a true
+    * clustering-cost signal and their oracle checks stay end-to-end
+    * live. (The incremental fold that maintains this table at scale is
+    * [[Dedup.incrementalConnectedComponents]].) */
   private[queries] def clusterLabels(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_labels_${ProcessHandle.current().pid()}_$tag").toString
-    labelTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Materialize.shared(s, dir, "labels") {
       val docs = Tables(s, dir, "documents")
       Dedup.connectedComponents(docs, "doc_id",
-          Dedup.ngramJaccardPairs(docs, 3, 0.8))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        Dedup.ngramJaccardPairs(docs, 3, 0.8))
+    }
 
   /** The duplicated-window relation of the ExactSubstr family at the
     * inventory's l = 8 ([[graft.operators.Dedup.duplicatedWindows]]:
     * one (doc_id, pos, fp, sdoc, spos) row per duplicated-window
-    * occurrence), materialized ONCE per (JVM, sfDir) and shared by the
-    * DERIVED consumers (`dedup_substr_rate`, `dedup_substr_removed`,
-    * and the composed `pipeline_curate_substr` — VERDICT r12 measured
-    * the same fingerprint pass recomputed 4× across one inventory
-    * pass, 13.3 s of the most expensive query). `dedup_substr_spans`
-    * deliberately does NOT use this: it is the canonical live entry,
-    * so the bench keeps a true fingerprint-pass cost signal and its
-    * oracle check stays end-to-end.
-    *
-    * Same contract as [[clusterLabels]]: at 100 TB this is a persisted
-    * lake table maintained beside the corpus; here a pid-keyed tmp
-    * parquet (a driver testdata regeneration is always a new JVM, so
-    * stale serves are impossible) with `computeIfAbsent` blocking
-    * concurrent first callers. */
-  private val substrWindowTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * occurrence), a [[Materialize.shared]] table read by the DERIVED
+    * consumers (`dedup_substr_rate`, `dedup_substr_removed`, and the
+    * composed `pipeline_curate_substr` — VERDICT r12 measured the same
+    * fingerprint pass recomputed 4× across one inventory pass, 13.3 s
+    * of the most expensive query). `dedup_substr_spans` deliberately
+    * does NOT use this: it is the canonical live entry, so the bench
+    * keeps a true fingerprint-pass cost signal and its oracle check
+    * stays end-to-end. */
   private[queries] def windowFps(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_substr_wins_${ProcessHandle.current().pid()}_$tag").toString
-    substrWindowTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Materialize.shared(s, dir, "substr_wins") {
       Dedup.duplicatedWindows(Tables(s, dir, "documents"), 8)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** The ExactSubstr-CLEANED corpus at l = 8 (every duplicated 8-token
     * window keeps its first corpus occurrence; later copies lose the
-    * survivor-uncovered duplicated tokens), materialized ONCE per
-    * (JVM, sfDir) and shared by `dedup_substr_removed` and the composed
+    * survivor-uncovered duplicated tokens), a [[Materialize.shared]]
+    * table read by `dedup_substr_removed` and the composed
     * `pipeline_curate_substr` — round 15's bench showed the removal
     * chain (tokenize → window join → reassembly) re-running inside both
     * entries, with the composed pipeline the single heaviest query
@@ -175,191 +142,95 @@ object DedupOps {
     * fingerprint-pass entry, and the DuckDB oracles of both consumers
     * still recompute the FULL removal chain from raw text, so the
     * materialized table is hash-certified end-to-end on every gate. */
-  private val cleanedDocTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] def cleanedDocs(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_substr_clean_${ProcessHandle.current().pid()}_$tag").toString
-    cleanedDocTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Materialize.shared(s, dir, "substr_clean") {
       Dedup.removeSubstringsFromWindows(
-          Tables(s, dir, "documents"), windowFps(s, dir), 8)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
-
-  /** The persisted BASE half of the incremental ExactSubstr index
-    * (occurrences + per-fp stats at l = 8 over the deterministic
-    * `sinc:` base split), materialized once per (JVM, sfDir) — the
-    * stand-in for the lake tables a daily-crawl loop maintains. The
-    * `dedup_substr_incremental` entry folds the batch split into THIS,
-    * never re-fingerprinting base documents. */
-  private val substrIndexTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+        Tables(s, dir, "documents"), windowFps(s, dir), 8)
+    }
 
   private[queries] def substrIncSplit =
     substring(md5(concat(lit("sinc:"),
       col("doc_id").cast(org.apache.spark.sql.types.StringType))), 1, 1)
 
+  /** The persisted BASE half of the incremental ExactSubstr index
+    * (occurrences + per-fp stats at l = 8 over the deterministic
+    * `sinc:` base split), two [[Materialize.shared]] tables — the
+    * stand-in for the lake tables a daily-crawl loop maintains. The
+    * `dedup_substr_incremental` entry folds the batch split into THIS,
+    * never re-fingerprinting base documents. */
   private[queries] def substrBaseIndex(
       s: org.apache.spark.sql.SparkSession, dir: String)
   : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_substr_idx_${ProcessHandle.current().pid()}_$tag").toString
-    substrIndexTables.computeIfAbsent(root, { p =>
-      val base = Tables(s, dir, "documents").filter(substrIncSplit < "c")
-      val wins = Dedup.allWindows(base, 8)
-      wins.write.mode("overwrite").parquet(s"$p/wins")
-      Dedup.windowStats(s.read.parquet(s"$p/wins"))
-        .write.mode("overwrite").parquet(s"$p/stats")
-      p
+    val wins = Materialize.shared(s, dir, "substr_idx_wins") {
+      Dedup.allWindows(
+        Tables(s, dir, "documents").filter(substrIncSplit < "c"), 8)
+    }
+    (wins, Materialize.shared(s, dir, "substr_idx_stats") {
+      Dedup.windowStats(wins)
     })
-    (s.read.parquet(s"$root/wins"), s.read.parquet(s"$root/stats"))
   }
 
   /** The PERSISTED base-split label table for incremental clustering
-    * (CC over the `inc` base split's Jaccard-0.8 pair graph),
-    * materialized once per (JVM, sfDir): the production daily-crawl
-    * loop maintains exactly this state table between crawls, so the
-    * gated `dedup_clusters_incremental` measures the PER-INCREMENT
-    * cost (batch scoring + fold), not a from-scratch base rebuild —
+    * (CC over the `inc` base split's Jaccard-0.8 pair graph), a
+    * [[Materialize.shared]] table: the production daily-crawl loop
+    * maintains exactly this state table between crawls, so the gated
+    * `dedup_clusters_incremental` measures the PER-INCREMENT cost
+    * (batch scoring + fold), not a from-scratch base rebuild —
     * `dedup_clusters` keeps the live from-scratch signal. */
-  private val incLabelTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] def incBaseLabels(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_inclabels_${ProcessHandle.current().pid()}_$tag").toString
-    incLabelTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Materialize.shared(s, dir, "inclabels") {
       val base = Tables(s, dir, "documents")
         .filter(Curation.hashKeep(col("doc_id"), "inc", 12))
       Dedup.connectedComponents(base, "doc_id",
-          Dedup.ngramJaccardPairs(base, 3, 0.8))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        Dedup.ngramJaccardPairs(base, 3, 0.8))
+    }
 
   /** The persisted base-split SHINGLE index (catalog tables, bucketed
     * on shingle — [[graft.operators.Dedup.writeShingleIndex]]) beside
     * [[incBaseLabels]]: the cross-pair probe then never re-shingles a
     * base document and the index side joins through its buckets. */
-  private val incIndexNames =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[queries] def incShingleIndex(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    // pid-keyed like the parquet-backed shares (graft_substr_wins_<pid>):
-    // two JVMs sharing a warehouse dir must never drop each other's live
-    // index tables mid-read (the setup below drop+deletes its names)
-    val name = s"graft_incidx_${ProcessHandle.current().pid()}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    incIndexNames.computeIfAbsent(name, { n =>
-      // a previous JVM's warehouse directory may survive while the
-      // (in-memory) catalog forgets the table — saveAsTable then
-      // refuses the orphaned location; drop both layers first
-      val wh = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"))
-      val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-      Seq(s"${n}_shingles", s"${n}_sizes").foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val p = new org.apache.hadoop.fs.Path(wh, t)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Materialize.sharedTables(s, dir, "incidx") { n =>
       val base = Tables(s, dir, "documents")
         .filter(Curation.hashKeep(col("doc_id"), "inc", 12))
       Dedup.writeShingleIndex(base, 3, n, buckets = 16)
-      n
-    })
-    name
-  }
+    }
 
   /** The persisted base-split LSH BAND table (catalog, bucketed on bh —
     * [[graft.operators.Dedup.writeLshIndex]]): the sketch-probe
     * counterpart of [[incShingleIndex]] for corpora whose exact shingle
-    * index is too large to keep (band rows ∝ documents, not tokens). */
-  private val incLshNames =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * index is too large to keep (band rows ∝ documents, not tokens).
+    * It derives from the SHARED signature table ([[minhashSigs]]). */
   private[queries] def incLshIndex(
-      s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    // pid-keyed for the same cross-JVM safety as incShingleIndex
-    val name = s"graft_inclsh_${ProcessHandle.current().pid()}_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    incLshNames.computeIfAbsent(name, { n =>
-      val wh = new org.apache.hadoop.fs.Path(
-        s.conf.get("spark.sql.warehouse.dir"))
-      val fs = wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-      Seq(s"${n}_bands", s"${n}_bandsizes").foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val p = new org.apache.hadoop.fs.Path(wh, t)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      // the band table derives from the SHARED signature materialization
-      // (sketch once per (JVM, sfDir), share across every LSH consumer)
+      s: org.apache.spark.sql.SparkSession, dir: String): String =
+    Materialize.sharedTables(s, dir, "inclsh") { n =>
       Dedup.writeLshIndexFromSigs(
         minhashSigs(s, dir).filter(
           Curation.hashKeep(col("doc_id"), "inc", 12)),
         n, buckets = 16)
-      n
-    })
-    name
-  }
+    }
 
   /** The full-corpus MinHash SIGNATURE table (doc_id, 64-hash sig at
-    * n = 3), materialized ONCE per (JVM, sfDir) and shared by every LSH
-    * consumer — VERDICT r13 measured `dedup_minhash_lsh` and the
-    * incremental index build each sketching their corpus independently
-    * (together the two most expensive bench entries). At 100 TB the
-    * signature table IS the persisted per-document sketch state a
-    * corpus keeps beside itself (rows ∝ documents, 8·64 bytes each),
-    * written once per corpus version; here the usual pid-keyed tmp
-    * parquet. `dedup_minhash_incremental`'s BATCH side deliberately
-    * stays live-computed — the per-increment sketch cost is that
-    * entry's canonical signal. */
-  private val minhashSigTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * n = 3), a [[Materialize.shared]] table read by every LSH consumer
+    * — VERDICT r13 measured `dedup_minhash_lsh` and the incremental
+    * index build each sketching their corpus independently (together
+    * the two most expensive bench entries). At 100 TB the signature
+    * table IS the persisted per-document sketch state a corpus keeps
+    * beside itself (rows ∝ documents, 8·64 bytes each), written once
+    * per corpus version. `dedup_minhash_incremental`'s BATCH side
+    * deliberately stays live-computed — the per-increment sketch cost
+    * is that entry's canonical signal. */
   private[queries] def minhashSigs(
       s: org.apache.spark.sql.SparkSession, dir: String)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_mhsigs_${ProcessHandle.current().pid()}_$tag").toString
-    minhashSigTables.computeIfAbsent(path, { p =>
+  : org.apache.spark.sql.DataFrame =
+    Materialize.shared(s, dir, "mhsigs") {
       Dedup.minhashSignatureArray(Tables(s, dir, "documents"), 3, 64)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
-
-  /** Materialize both shared tables eagerly — Bench calls this in its
-    * UNTIMED warm-up so the one-off build cost is never attributed to
-    * whichever derived entry happens to run first (at
-    * SPARK_GRAFT_BENCH_RUNS=1 the min cannot absorb a first-pass
-    * build; ADVICE r12). */
-  private[graft] def warmSharedTables(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    clusterLabels(s, dir)
-    windowFps(s, dir)
-    substrBaseIndex(s, dir)
-    incBaseLabels(s, dir)
-    incShingleIndex(s, dir)
-    minhashSigs(s, dir)
-    incLshIndex(s, dir)
-    ()
-  }
+    }
 
   /** Shared CTE chain for the ExactSubstr oracles: sliding `l`-token
     * window fingerprints → duplicated windows → per-doc maximal covered
@@ -1106,15 +977,14 @@ object DedupOps {
     // dedup threshold — per candidate threshold, how many near-dup
     // pairs and how many distinct documents they touch. The pair
     // relation is computed ONCE at the loosest threshold (0.5) and
-    // localCheckpoint-materialized, so the four cutoffs are two tiny
+    // materialized once, so the four cutoffs are two tiny
     // conditional aggregates over it, not four quadratic joins.
     Entry(
       "dedup_threshold_sweep",
       (s, dir) => {
         val thresholds = Seq(0.5, 0.7, 0.8, 0.9)
-        val pairs = Dedup
-          .ngramJaccardPairs(Tables(s, dir, "documents"), 3, 0.5)
-          .localCheckpoint()
+        val pairs = Materialize.once("dedup_threshold_sweep.pairs", Dedup
+          .ngramJaccardPairs(Tables(s, dir, "documents"), 3, 0.5))
         def counts(c: String, pfx: String) = thresholds.zipWithIndex.map {
           case (t, i) =>
             coalesce(sum(when(col(c) >= t, 1L)), lit(0L)).as(s"$pfx$i")

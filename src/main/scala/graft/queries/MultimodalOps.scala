@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Materialize, Tables}
 import graft.operators.Multimodal
 
 /** Multimodal inventory: opaque binary payload + typed metadata, frame
@@ -23,17 +23,15 @@ object MultimodalOps {
     * entries, and since r18 the image decode/resize pair shares the
     * rendered-PNG corpus the same way ([[imageCorpus]]). Every oracle
     * recomputes from raw `documents`, so the materialization stays
-    * hash-certified on every gate. */
-  private val variantTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The video family's shared 3-variant GVID corpus: 4-frame 8 px,
+    * hash-certified on every gate.
+    *
+    * The video family's shared 3-variant GVID corpus: 4-frame 8 px,
     * its pixel-doubled re-encode, and the 3-frame trailing trim
     * (vid = doc·3 + off). */
   private def videoVariantCorpus(
       s: org.apache.spark.sql.SparkSession, dir: String)
   : org.apache.spark.sql.DataFrame =
-    materializedVariants(s, dir, "vid") {
+    Materialize.shared(s, dir, "mm_vid") {
       val docs = Tables(s, dir, "documents")
       Multimodal.syntheticPatternVideos(s, docs, 8, 4)
         .select((col("doc_id") * 3).as("doc_id"), col("payload"))
@@ -59,22 +57,9 @@ object MultimodalOps {
   private def imageCorpus(
       s: org.apache.spark.sql.SparkSession, dir: String)
   : org.apache.spark.sql.DataFrame =
-    materializedVariants(s, dir, "img") {
+    Materialize.shared(s, dir, "mm_img") {
       Multimodal.syntheticImages(s, Tables(s, dir, "documents"), 4)
     }
-
-  private def materializedVariants(
-      s: org.apache.spark.sql.SparkSession, dir: String, kind: String)(
-      build: => org.apache.spark.sql.DataFrame)
-  : org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_mm_${kind}_${ProcessHandle.current().pid()}_$tag").toString
-    variantTables.computeIfAbsent(path, { p =>
-      build.write.mode("overwrite").parquet(p); p
-    })
-    s.read.parquet(path)
-  }
 
   val entries: Seq[Entry] = Seq(
 
@@ -312,7 +297,8 @@ object MultimodalOps {
         // the banded join is a self-join: materialize the tiny
         // signature table (eager checkpoint) so the codec decode runs
         // ONCE — lazily cached, the join sides raced the fill (r19)
-        graft.operators.Dedup.hammingPairsFromSigs(sigs.localCheckpoint(true), "sig", 3, sigBits = 56)
+        graft.operators.Dedup.hammingPairsFromSigs(
+          Materialize.once("mm_dedup_image.sigs", sigs), "sig", 3, sigBits = 56)
           .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
             col("hamming").cast("int").as("hamming"))
           .orderBy("vid_a", "vid_b")
@@ -375,7 +361,9 @@ object MultimodalOps {
         val batchSigs = Multimodal
           .imageSignature(s, variants(docs.filter(!keep)))
         graft.operators.Dedup
-          .incrementalHammingPairs(baseSigs.localCheckpoint(true), batchSigs.localCheckpoint(true),
+          .incrementalHammingPairs(
+            Materialize.once("mm_dedup_image_incremental.baseSigs", baseSigs),
+            Materialize.once("mm_dedup_image_incremental.batchSigs", batchSigs),
             "sig", 3, sigBits = 56)
           .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
             col("hamming").cast("int").as("hamming"))
@@ -434,7 +422,9 @@ object MultimodalOps {
         val baseSigs = Multimodal.videoSignature(s, corpus.filter(keep))
         val batchSigs = Multimodal.videoSignature(s, corpus.filter(!keep))
         graft.operators.Dedup
-          .incrementalHammingPairs(baseSigs.localCheckpoint(true), batchSigs.localCheckpoint(true),
+          .incrementalHammingPairs(
+            Materialize.once("mm_dedup_video_incremental.baseSigs", baseSigs),
+            Materialize.once("mm_dedup_video_incremental.batchSigs", batchSigs),
             "sig", 3, sigBits = 56)
           .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
             col("hamming").cast("int").as("hamming"))
@@ -504,7 +494,8 @@ object MultimodalOps {
         // the banded join is a self-join: materialize the tiny
         // signature table (eager checkpoint) so the codec decode runs
         // ONCE — lazily cached, the join sides raced the fill (r19)
-        graft.operators.Dedup.hammingPairsFromSigs(sigs.localCheckpoint(true), "sig", 3, sigBits = 56)
+        graft.operators.Dedup.hammingPairsFromSigs(
+          Materialize.once("mm_dedup_audio.sigs", sigs), "sig", 3, sigBits = 56)
           .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
             col("hamming").cast("int").as("hamming"))
           .orderBy("vid_a", "vid_b")
@@ -547,7 +538,7 @@ object MultimodalOps {
       (s, dir) => {
         // shared WAV fixture, same discipline as the video twin
         // (vid = doc·2 + off → orig = vid DIV 2)
-        val corpus = materializedVariants(s, dir, "aud") {
+        val corpus = Materialize.shared(s, dir, "mm_aud") {
           val docs = Tables(s, dir, "documents")
           Multimodal.syntheticPatternAudio(s, docs, 57, 32)
             .select((col("doc_id") * 2).as("doc_id"), col("payload"))
@@ -560,7 +551,9 @@ object MultimodalOps {
         val baseSigs = Multimodal.audioSignature(s, corpus.filter(keep))
         val batchSigs = Multimodal.audioSignature(s, corpus.filter(!keep))
         graft.operators.Dedup
-          .incrementalHammingPairs(baseSigs.localCheckpoint(true), batchSigs.localCheckpoint(true),
+          .incrementalHammingPairs(
+            Materialize.once("mm_dedup_audio_incremental.baseSigs", baseSigs),
+            Materialize.once("mm_dedup_audio_incremental.batchSigs", batchSigs),
             "sig", 3, sigBits = 56)
           .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
             col("hamming").cast("int").as("hamming"))
@@ -616,7 +609,8 @@ object MultimodalOps {
         // the banded join is a self-join: materialize the tiny
         // signature table (eager checkpoint) so the codec decode runs
         // ONCE — lazily cached, the join sides raced the fill (r19)
-        graft.operators.Dedup.hammingPairsFromSigs(sigs.localCheckpoint(true), "sig", 3, sigBits = 56)
+        graft.operators.Dedup.hammingPairsFromSigs(
+          Materialize.once("mm_dedup_video.sigs", sigs), "sig", 3, sigBits = 56)
           .select(col("doc_a").as("vid_a"), col("doc_b").as("vid_b"),
             col("hamming").cast("int").as("hamming"))
           .orderBy("vid_a", "vid_b")

@@ -253,7 +253,7 @@ object StreamingIvm {
   /** ONE definition of the versioned-commit protocol, shared by
     * [[applyBatch]] and [[CrawlDedup]]'s versioned folds (review r18 —
     * the two inline copies had already drifted in prose and a protocol
-    * fix would have landed in one): localCheckpoint (the fold's
+    * fix would have landed in one): materialize (the fold's
     * lineage reads the predecessor version, never the directory being
     * overwritten, and the checkpoint also decouples from the streaming
     * batch) → overwrite `stateDir/v=<batchId>` → verify the _SUCCESS
@@ -271,7 +271,7 @@ object StreamingIvm {
     // the PREDECESSOR version (`readState(Some(batchId))` selects
     // strictly below batchId), never `v=<batchId>` itself, so the
     // overwrite is read-free and the write can execute the fold plan
-    // directly — the old eager localCheckpoint materialized every
+    // directly — the old eager checkpoint materialized every
     // committed state TWICE (once to executor storage, once reading it
     // back for parquet), one full extra pass per fold at any scale.
     df.write.mode(SaveMode.Overwrite).parquet(s"$stateDir/v=$batchId")

@@ -97,7 +97,7 @@ object StreamingMv {
     //    reads the JUST-WRITTEN partition back (r18): the batch is
     //    evaluated exactly once — the write — and the corpus bytes and
     //    the folded delta are the same bytes by construction, which the
-    //    old eager localCheckpoint only approximated while costing one
+    //    old eager checkpoint only approximated while costing one
     //    extra materialization pass per fold.
     batch
       .select((cfg.keyCols.map(col) :+ col(cfg.valueCol)) ++
